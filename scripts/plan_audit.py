@@ -110,6 +110,36 @@ def main():
     checks.append(("anti-join present",
                    "LeftAnti" in plan or "left_anti" in plan.lower(), ""))
 
+    # 4a. R5 done-skip: the crawler's anti-join of a frontier scan
+    # against a small done-seed sidecar broadcasts the sidecar — a
+    # BroadcastHashJoin LeftAnti with no shuffle Exchange anywhere, so
+    # the frontier side is never shuffled
+    import shutil
+    import tempfile
+
+    from simplecrawler_spark.plans.crawl import FrontierCrawler
+    tmp = tempfile.mkdtemp(prefix="doneskip_audit_")
+    try:
+        fc = FrontierCrawler(spark, None, CrawlConfig(), root=tmp)
+        fr_path = os.path.join(tmp, "frontier_r1")
+        (ev.select(F.concat(F.lit("http://"), "host", F.lit("/"),
+                            F.col("url_hash").cast("string"))
+                   .alias("url_norm"), "host")
+         .write.parquet(fr_path))
+        frontier = spark.read.parquet(fr_path)
+        fc._n_done_seeds = fc._append_done_seeds(frontier.limit(8))
+        plan = formatted(fc._skip_done_seeds(frontier))
+        sections.append(("R5 done-skip (8 done seeds)", plan))
+        checks.append(("done-skip broadcasts the done-seed sidecar, "
+                       "frontier not shuffled",
+                       n_ops(plan, "BroadcastHashJoin") == 1
+                       and "LeftAnti" in plan
+                       and n_ops(plan, "Exchange") == 0,
+                       f"bhj={n_ops(plan, 'BroadcastHashJoin')}, "
+                       f"exchanges={n_ops(plan, 'Exchange')}"))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
     def n_python(plan: str) -> int:
         return (n_ops(plan, "ArrowEvalPython")
                 + n_ops(plan, "BatchEvalPython")
@@ -485,9 +515,6 @@ def main():
 
     # 15. IVF probe is a partition-pruned scan: non-probed cell
     # directories never reach the file index
-    import shutil
-    import tempfile
-
     from simplecrawler_spark.operators.similarity import (
         ann_ivf_probe,
         ivf_build,

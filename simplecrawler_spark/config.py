@@ -51,27 +51,22 @@ class CrawlConfig:
     #     orders deferred-shallow ahead of newly-found-deep);
     #   "fifo" — the reference's arrival order (priority 0.0; the
     #     window degenerates to the url_hash tie-break).
-    #   "pagerank" — -(offline integer-mass PageRank score,
-    #     operators/graph.py) read from the parquet table at
-    #     `pagerank_path` (columns v, rank — e.g. a previous crawl's
-    #     link_edges() fed through pagerank()): authoritative pages
-    #     first. One left join of the round's new frontier onto the
+    #   "rank" — -(a precomputed score): reads the parquet at
+    #     `rank_table_path` and orders by -`rank_column` (integer or
+    #     fractional), so ANY (v, score) table drives scheduling —
+    #     e.g. a previous crawl's link_edges() fed through pagerank()
+    #     (columns v, rank — the default rank_column), hits()'s
+    #     (v, hub, auth) with rank_column="auth" (authorities first)
+    #     or "hub" (link-list pages first), or an external quality
+    #     score. One left join of the round's new frontier onto the
     #     rank table; never-ranked urls get 0. AQE broadcasts the rank
     #     side while it is small; at 10^10 URLs write the rank table
     #     bucketed by its key and the join co-locates instead.
+    # Any other value is rejected at FrontierCrawler construction.
     # Every deferred row is eventually scheduled, so the visited SET
     # never changes with the source. Deferred rows keep the priority
     # computed at discovery time.
-    #   "rank" — the source-agnostic form of "pagerank": reads the
-    #     parquet at `rank_table_path` and orders by -`rank_column`,
-    #     so ANY precomputed (v, score) table drives scheduling —
-    #     e.g. hits()'s (v, hub, auth) with rank_column="auth"
-    #     (authorities first) or "hub" (link-list pages first), a
-    #     prior crawl's pagerank, or an external quality score.
-    #     Same join shape and unranked-scores-0 semantics as
-    #     "pagerank", which remains the (v, rank)-shaped alias.
     priority_source: str = "indegree"
-    pagerank_path: str | None = None
     rank_table_path: str | None = None
     rank_column: str = "rank"
     # global per-round fetch cap (resource-bounded rounds): after the
@@ -124,17 +119,6 @@ class CrawlConfig:
     fetch_concurrency: int = 8
     # checkpoint/resume
     checkpoint: bool = True
-    # R5 seed/done-seed state engine. "driver": seed + done-seed sets
-    # live as Python sets (fast below ~10^5 seeds, O(|seeds|) driver
-    # memory). "table": seeds live ONLY in the r0 frontier partition
-    # and done-seeds in a parquet sidecar — per-round done-skip and
-    # seed-completion become anti-joins/semi-joins and the driver
-    # keeps two counters, so a sitemap-scale (10^7-10^8) seed ingest
-    # never materialises a seed list in driver memory. "auto": driver
-    # below seed_driver_max seeds, table at/above (crawl_df — seeds
-    # arriving as a DataFrame — always uses table).
-    seed_state_mode: str = "auto"
-    seed_driver_max: int = 100_000
     # table maintenance cadence: every N rounds (after that round's
     # snapshot commits) compact the seen/results tables' committed
     # append dirs (SnapshotStore.compact — Iceberg rewriteDataFiles

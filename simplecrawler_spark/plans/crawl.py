@@ -7,7 +7,7 @@ north rule mandates (BASELINE.json:6,14):
 
     Round r:
       frontier_r  = read frontier WHERE round = r       (file-pruned scan)
-      eligible    = frontier_r ⟕ anti-join(results)     (R5 done-skip)
+      eligible    = frontier_r ⟕ anti-join(done seeds)  (R5 done-skip)
       allowed     = robots can_fetch gate               (G4)
       scheduled,
       deferred    = per-host window budget              (G5)
@@ -72,6 +72,10 @@ from simplecrawler_spark.sources.fetch import mime_ok_expr, status_class_expr
 
 _LOG_EVENT_ORDER = {"ROBOTS_BLOCKED": 0, "CRAWLING": 1, "VISITED": 2,
                     "FOUND": 3, "ERROR": 4}
+
+# CrawlConfig.priority_source values (see config.py for each meaning)
+PRIORITY_SOURCES = frozenset({"indegree", "hostrank", "depth", "rank",
+                              "fifo"})
 
 
 def render_crawl_log(log_df: DataFrame,
@@ -150,24 +154,12 @@ class FrontierCrawler:
         # R5 done-skip state. The ONLY urls that can be both done and
         # re-enter the frontier are seeds (a seed is never added to
         # seen — crawler.py:198-199, SURVEY.md §2.6.1 — so a page
-        # linking back to it re-enqueues it once). Two engines
-        # (cfg.seed_state_mode): "driver" tracks the handful of seed
-        # urls as Python sets — fastest while seeds are few; "table"
-        # (round-4 verdict item 4) keeps seeds ONLY in the r0 frontier
-        # partition and done-seeds in a parquet sidecar, so the driver
-        # holds two COUNTERS and a 10^7+-seed ingest never builds an
-        # O(|seeds|) Python set. Joins replace set lookups: done-skip
-        # is an anti-join (AQE broadcasts while small), completion is
-        # a semi-join appended to the sidecar.
-        self._seed_norms: set[str] = set()
-        self._done_seeds: set[str] = set()
-        # cached done-seed DF for the R5 anti-join: the set stops
-        # changing once every seed has fetched (usually after round 0),
-        # so rebuilding a driver-side DF per round is wasted serial time
-        self._done_seeds_df = None
-        self._done_seeds_df_size = -1
-        # table-mode seed state: counters + sidecar path only
-        self._seed_table_mode = (self.cfg.seed_state_mode == "table")
+        # linking back to it re-enqueues it once). Seeds live ONLY in
+        # the r0 frontier partition and done-seeds in a parquet
+        # sidecar, so the driver holds two COUNTERS and a 10^7+-seed
+        # ingest never builds an O(|seeds|) Python set: done-skip is an
+        # anti-join against the sidecar, completion a semi-join
+        # appended to it.
         self._n_seeds = 0
         self._n_done_seeds = 0
         self._done_seed_dir = os.path.join(self.root, "sidecar",
@@ -178,12 +170,11 @@ class FrontierCrawler:
         # already-small) `new` DF each round — and only when the
         # same-authority filter is off (otherwise none can appear).
         self._auth_pending: dict[str, str] = {}
-        # G6 "pagerank" priority: the rank table handle, read once
-        if self.cfg.priority_source == "pagerank" \
-                and not self.cfg.pagerank_path:
+        if self.cfg.priority_source not in PRIORITY_SOURCES:
             raise ValueError(
-                "priority_source='pagerank' needs cfg.pagerank_path "
-                "(a parquet of (v, rank) — see operators/graph.py)")
+                f"unknown priority_source {self.cfg.priority_source!r}; "
+                f"expected one of {sorted(PRIORITY_SOURCES)}")
+        # G6 "rank" priority: the rank table handle, read once
         if self.cfg.priority_source == "rank" \
                 and not self.cfg.rank_table_path:
             raise ValueError(
@@ -216,8 +207,6 @@ class FrontierCrawler:
                 self._auth_pending.setdefault(authority, scheme or "http")
             rows.append((norm, s, None, authority, host, 0, 0.0, None, 0))
         self._n_seeds = len(rows)
-        if not self._seed_table_mode:
-            self._seed_norms = seen_norm
         df = self.spark.createDataFrame(rows, schemas.FRONTIER)
         return df.withColumn("url_hash", url_hash(F.col("url_norm")))
 
@@ -255,11 +244,11 @@ class FrontierCrawler:
             F.lit(None).cast("string").alias("discovered_from"),
             F.lit(0).alias("round"))
 
-    # -- table-mode seed state (round-4 verdict item 4) ---------------- #
+    # -- R5 seed state (round-4 verdict item 4) ----------------------- #
 
     def _seed_table(self) -> DataFrame:
         """The seed set AS A TABLE: round-0 frontier url_norms — the
-        single source of truth in table mode (nothing driver-side)."""
+        single source of truth (nothing driver-side)."""
         return (self.store.read("frontier", partition="r0")
                 .where(F.col("round") == 0).select("url_norm").distinct())
 
@@ -268,10 +257,12 @@ class FrontierCrawler:
             self._done_seed_dir)
 
     def _append_done_seeds(self, done: DataFrame) -> int:
-        """Append newly-completed seed norms to the sidecar; returns
-        how many landed (bounded work: at most |seeds| rows EVER cross
-        this path, most in round 0)."""
-        done = done.select("url_norm").persist()
+        """Append newly-completed seed norms to the sidecar, deduped
+        (a fetcher may return a url twice — a duplicate would inflate
+        _n_done_seeds and end completion tracking early); returns how
+        many landed (bounded work: at most |seeds| rows EVER cross this
+        path, most in round 0)."""
+        done = done.select("url_norm").distinct().persist()
         n = done.count()
         if n:
             os.makedirs(self._done_seed_dir, exist_ok=True)
@@ -279,6 +270,19 @@ class FrontierCrawler:
                 self._done_seed_dir)
         done.unpersist()
         return n
+
+    def _skip_done_seeds(self, frontier_r: DataFrame) -> DataFrame:
+        """R5: drop frontier rows already done. Only re-discovered
+        seeds can be done-but-in-frontier (see __init__ note), so the
+        done-skip never scans the results table, only the done-seed
+        sidecar: a small sidecar plans as a broadcast anti-join (no
+        shuffle of the frontier — scripts/plan_audit.py checks it); at
+        sitemap scale it is a hash join on the key the frontier
+        already carries."""
+        if not self._n_done_seeds:
+            return frontier_r
+        return frontier_r.join(self._read_done_seeds(), "url_norm",
+                               "left_anti")
 
     def _ensure_robots(self) -> None:
         """Fetch robots.txt for pending authorities. The reference
@@ -347,9 +351,6 @@ class FrontierCrawler:
         if isinstance(seeds, str):
             seeds = [seeds]
         cfg = self.cfg
-        if (cfg.seed_state_mode == "auto"
-                and len(seeds) >= cfg.seed_driver_max):
-            self._seed_table_mode = True
         if cfg.bloom_enabled:
             self.bloom = BloomSeen(expected_items=max(cfg.bloom_min_items, cfg.bloom_initial_capacity),
                                    fpp=cfg.bloom_fpp)
@@ -361,24 +362,19 @@ class FrontierCrawler:
                  url_col: str = "url_raw") -> DataFrame:
         """Run the BFS fixpoint from a DataFrame of raw seed urls —
         the sitemap-scale entry (round-4 verdict item 4): seeds are
-        canonicalised, deduped and staged entirely as DataFrames, the
-        R5 seed state runs in table mode (counters + sidecar, no
-        O(|seeds|) Python set), and the driver never sees a url.
-        Identical final state to crawl() on the same seed set."""
+        canonicalised, deduped and staged entirely as DataFrames, and
+        the driver never sees a url. Identical final state to crawl()
+        on the same seed set."""
         cfg = self.cfg
-        if cfg.seed_state_mode != "driver":
-            self._seed_table_mode = True
         if cfg.bloom_enabled:
             self.bloom = BloomSeen(expected_items=max(cfg.bloom_min_items, cfg.bloom_initial_capacity),
                                    fpp=cfg.bloom_fpp)
         fr = self._seed_frontier_from_df(seeds_df, url_col=url_col)
         self.store.append("frontier", fr, partition="r0")
-        if self._seed_table_mode:
-            self._n_seeds = self._seed_table().count()
-        else:
-            self._seed_norms = {r.url_norm for r in
-                                self._seed_table().collect()}
-            self._n_seeds = len(self._seed_norms)
+        # the append is already deduped on url_norm: its parquet footer
+        # row count IS the seed count (no count() job)
+        self._n_seeds = sum(
+            f["rows"] for f in self.store._pending["frontier"][-1]["lineage"])
         return self._run_rounds(start_round=0)
 
     def _run_rounds(self, start_round: int) -> DataFrame:
@@ -532,33 +528,7 @@ class FrontierCrawler:
             phases[name] = round(now - _prev[0], 3)
             _prev[0] = now
 
-        # R5: skip anything already done. Only re-discovered seeds can
-        # be done-but-in-frontier (see __init__ note), so the done-skip
-        # never scans the results table: a literal filter for a few
-        # seeds, a broadcast anti-join for many (a large isin-literal
-        # list bloats every job's plan and is O(|seeds|) per row).
-        # Table mode: anti-join against the done-seed sidecar — AQE
-        # broadcasts while it is small; at sitemap scale it is a hash
-        # join on the key the frontier already carries.
-        if self._seed_table_mode:
-            eligible = (frontier_r if not self._n_done_seeds
-                        else frontier_r.join(self._read_done_seeds(),
-                                             "url_norm", "left_anti"))
-        elif not self._done_seeds:
-            eligible = frontier_r
-        elif len(self._done_seeds) <= 64:
-            eligible = frontier_r.filter(
-                ~F.col("url_norm").isin(sorted(self._done_seeds)))
-        else:
-            if self._done_seeds_df_size != len(self._done_seeds):
-                if self._done_seeds_df is not None:
-                    self._done_seeds_df.unpersist()
-                self._done_seeds_df = self.spark.createDataFrame(
-                    [(s,) for s in sorted(self._done_seeds)],
-                    "url_norm string").persist()
-                self._done_seeds_df_size = len(self._done_seeds)
-            eligible = frontier_r.join(F.broadcast(self._done_seeds_df),
-                                       "url_norm", "left_anti")
+        eligible = self._skip_done_seeds(frontier_r)
 
         # S4/G4: robots — pending authorities were noted driver-side
         # (seeds at crawl(); discoveries ride on the prior round's
@@ -707,34 +677,17 @@ class FrontierCrawler:
         # R5 upkeep: record which seeds completed this round (a seed
         # that errored stays pending and is refetchable if
         # re-discovered — exact reference semantics, crawler.py:168-174)
-        if self._seed_table_mode:
-            # completion via joins, counters only: new done = this
-            # round's done fetches ∩ seed table ∖ already-done. At
-            # most |seeds| rows EVER cross this append, nearly all in
-            # round 0; once the counters agree the check is free.
-            if self._n_done_seeds < self._n_seeds:
-                new_done = (fetched.filter(done_cond)
-                            .join(self._seed_table(), "url_norm",
-                                  "left_semi"))
-                if self._n_done_seeds:
-                    new_done = new_done.join(self._read_done_seeds(),
-                                             "url_norm", "left_anti")
-                self._n_done_seeds += self._append_done_seeds(new_done)
-        else:
-            pending_seeds = self._seed_norms - self._done_seeds
-            if pending_seeds and len(pending_seeds) <= 64:
-                hit = (fetched.filter(
-                        F.col("url_norm").isin(sorted(pending_seeds)))
-                       .filter(done_cond).select("url_norm").collect())
-                self._done_seeds.update(row.url_norm for row in hit)
-            elif pending_seeds:
-                pend_df = self.spark.createDataFrame(
-                    [(s,) for s in sorted(pending_seeds)],
-                    "url_norm string")
-                hit = (fetched.join(F.broadcast(pend_df), "url_norm",
-                                    "left_semi")
-                       .filter(done_cond).select("url_norm").collect())
-                self._done_seeds.update(row.url_norm for row in hit)
+        # via joins, counters only: new done = this round's done
+        # fetches ∩ seed table ∖ already-done. At most |seeds| rows
+        # EVER cross this append, nearly all in round 0; once the
+        # counters agree the check is free.
+        if self._n_done_seeds < self._n_seeds:
+            new_done = (fetched.filter(done_cond)
+                        .join(self._seed_table(), "url_norm", "left_semi"))
+            if self._n_done_seeds:
+                new_done = new_done.join(self._read_done_seeds(),
+                                         "url_norm", "left_anti")
+            self._n_done_seeds += self._append_done_seeds(new_done)
         _mark("seed_check")
 
         # P1/P2/P3 + F12/F16/F8 + R3: the parse already ran inside the
@@ -803,7 +756,7 @@ class FrontierCrawler:
                 Window.partitionBy("host"))).cast("double")
         elif cfg.priority_source == "depth":
             priority = F.col("depth").cast("double")
-        elif cfg.priority_source in ("pagerank", "rank"):
+        elif cfg.priority_source == "rank":
             # offline rank table (operators/graph.py pagerank/hits, or
             # any (v, score) parquet) joined on at discovery time: one
             # left join per round of the (small, already-anti-joined)
@@ -977,27 +930,23 @@ class FrontierCrawler:
         return self.store.read("results")
 
     def _rank_table(self) -> DataFrame:
-        """The precomputed rank table for priority_source "pagerank"
-        ((v, rank) at cfg.pagerank_path) or "rank" ((v, cfg.
-        rank_column) at cfg.rank_table_path — hits()'s auth/hub, a
-        prior pagerank, any offline score), read once per crawler and
-        column-renamed so the per-round left join never collides with
-        frontier columns."""
+        """The precomputed rank table for priority_source "rank":
+        (v, cfg.rank_column) at cfg.rank_table_path — pagerank()'s
+        rank, hits()'s auth/hub, any offline score, integer or
+        fractional — read once per crawler and column-renamed so the
+        per-round left join never collides with frontier columns."""
         if self._pr_df is None:
-            if self.cfg.priority_source == "rank":
-                path, col = self.cfg.rank_table_path, self.cfg.rank_column
-            else:
-                path, col = self.cfg.pagerank_path, "rank"
             self._pr_df = (
-                self.spark.read.parquet(path)
+                self.spark.read.parquet(self.cfg.rank_table_path)
                 .select(F.col("v").cast("string").alias("_pr_v"),
-                        F.col(col).cast("long").alias("_pr_rank")))
+                        F.col(self.cfg.rank_column).cast("double")
+                        .alias("_pr_rank")))
         return self._pr_df
 
     def link_edges(self) -> DataFrame:
         """The crawl's hyperlink edge set (src, dst) for offline
         PageRank (operators/graph.py pagerank; feed its output back
-        via cfg.pagerank_path on the next crawl). With the crawl_log
+        via cfg.rank_table_path on the next crawl). With the crawl_log
         sink on, every FOUND event contributes — the full discovery
         multigraph (pagerank distinct-s parallel edges). Without it,
         the frontier's first-discovery edges: a spanning subgraph of
@@ -1247,36 +1196,15 @@ class FrontierCrawler:
             raise RuntimeError("nothing to resume — no committed snapshot")
         cfg = self.cfg
         # recover the R5 seed state from the checkpoint (two tiny jobs,
-        # once per resume): seeds = round-0 frontier; done = those
-        # already present in results
+        # once per resume, no O(|seeds|) collect): seeds = round-0
+        # frontier; the done-seed sidecar is rebuilt from results ∩
+        # seeds
         seed_df = self._seed_table()
-        n_seed_rows = (None if self._seed_table_mode
-                       else seed_df.count())
-        if self._seed_table_mode or (
-                cfg.seed_state_mode == "auto"
-                and n_seed_rows >= cfg.seed_driver_max):
-            # table-mode resume: counters from two joins, the
-            # done-seed sidecar rebuilt from results ∩ seeds — no
-            # O(|seeds|) collect anywhere
-            self._seed_table_mode = True
-            self._n_seeds = (n_seed_rows if n_seed_rows is not None
-                             else seed_df.count())
-            shutil.rmtree(self._done_seed_dir, ignore_errors=True)
-            done = (self.store.read("results")
-                    .join(seed_df, "url_norm", "left_semi")
-                    .select("url_norm").distinct())
-            self._n_done_seeds = self._append_done_seeds(done)
-        else:
-            self._seed_norms = {row.url_norm
-                                for row in seed_df.collect()}
-            if self._seed_norms:
-                sdf = self.spark.createDataFrame(
-                    [(s,) for s in sorted(self._seed_norms)],
-                    "url_norm string")
-                done = (self.store.read("results")
-                        .join(F.broadcast(sdf), "url_norm", "left_semi")
-                        .select("url_norm").distinct().collect())
-                self._done_seeds = {row.url_norm for row in done}
+        self._n_seeds = seed_df.count()
+        shutil.rmtree(self._done_seed_dir, ignore_errors=True)
+        self._n_done_seeds = self._append_done_seeds(
+            self.store.read("results").join(seed_df, "url_norm",
+                                            "left_semi"))
         # rebuild the BOUNDED robots view from the persisted table —
         # one aggregate for the counters, caches only within their
         # limits, authority bloom from the sidecar (else a distributed

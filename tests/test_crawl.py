@@ -478,9 +478,10 @@ def test_indegree_priority_schedules_hot_pages_first(spark, tmp_path):
 def test_pagerank_priority_schedules_ranked_pages_first(spark, tmp_path):
     """G6 (round-3 verdict item 6): the full offline loop — crawl with
     the log sink on, pagerank(link_edges()) to a parquet table, then a
-    budget-constrained recrawl with priority_source='pagerank' fetches
-    the high-rank page in an earlier round than the unranked-or-low
-    one. Visited set identical to fifo."""
+    budget-constrained recrawl with priority_source='rank' (pagerank's
+    (v, rank) table under the default rank_column) fetches the
+    high-rank page in an earlier round than the unranked-or-low one.
+    Visited set identical to fifo."""
     from pyspark.sql import functions as F
     from simplecrawler_spark.operators.graph import pagerank
     from simplecrawler_spark.sources.fixtures import (
@@ -518,8 +519,8 @@ def test_pagerank_priority_schedules_ranked_pages_first(spark, tmp_path):
         cfg = CrawlConfig(max_per_host_per_round=1, max_rounds=30,
                           same_authority_only=False,
                           priority_source=priority_source,
-                          pagerank_path=(rank_path if priority_source
-                                         == "pagerank" else None))
+                          rank_table_path=(rank_path if priority_source
+                                           == "rank" else None))
         crawler = FrontierCrawler(
             spark, TableFetcher(site_graph_df(spark, rows), cfg), cfg,
             root=str(tmp_path / f"p2-{priority_source}"))
@@ -528,17 +529,10 @@ def test_pagerank_priority_schedules_ranked_pages_first(spark, tmp_path):
                 for r in crawler.results().select("url_norm", "round")
                 .collect()}
 
-    got = rounds_by_url("pagerank")
+    got = rounds_by_url("rank")
     assert got[tgt + "/hot"] < got[tgt + "/cold"]
     fifo = rounds_by_url("fifo")
     assert set(fifo) == set(got)
-
-    # misconfiguration is loud, not silently-fifo
-    import pytest
-    with pytest.raises(ValueError, match="pagerank_path"):
-        FrontierCrawler(
-            spark, None, CrawlConfig(priority_source="pagerank"),
-            root=str(tmp_path / "bad"))
 
     # log-less crawls still expose a well-defined edge set (frontier
     # first-discovery spanning subgraph, seeds excluded)
@@ -760,30 +754,31 @@ def test_fair_round_budget_no_host_starvation(spark):
 
 
 # --------------------------------------------------------------------------
-# R5 seed state engines (round-4 verdict item 4: seeds off the driver)
+# R5 seed state (round-4 verdict item 4: seeds off the driver)
 # --------------------------------------------------------------------------
 
 def test_table_seed_mode_parity(spark, tmp_path):
-    """seed_state_mode='table' (counters + done-seed sidecar, joins
-    instead of Python sets) reaches the identical visited set and
-    depths as the driver-set engine on the reference graph."""
-    rows = crawler_server_rows(BASE)
-    a = crawl(spark, tmp_path / "drv", rows, BASE)
-    b = crawl(spark, tmp_path / "tbl", rows, BASE,
-              CrawlConfig(seed_state_mode="table"))
-    assert b._seed_table_mode
-    assert b._seed_norms == set() and b._done_seeds == set()
-    assert b._n_seeds == 1 and b._n_done_seeds == 1
-    assert a.result_urls() == b.result_urls()
-    da = {r.url_norm: r.depth for r in a.results().collect()}
-    db = {r.url_norm: r.depth for r in b.results().collect()}
-    assert da == db
+    """The seed state (counters + done-seed sidecar, joins instead of
+    Python sets) reaches the reference's visited set and BFS depths
+    (test_crawler_find_all_links, test_bfs_depths) and records the
+    seed done exactly once."""
+    c = crawl(spark, tmp_path, crawler_server_rows(BASE), BASE)
+    assert c._n_seeds == 1 and c._n_done_seeds == 1
+    assert [r.url_norm for r in c._read_done_seeds().collect()] == [
+        BASE + "/"]
+    depth = {r.url_norm: r.depth for r in c.results().collect()}
+    assert depth == {
+        BASE + "/": 0, BASE + "/hello": 1, BASE + "/world": 1,
+        BASE + "/mime/text/pdf": 1, BASE + "/mime/image/png": 1,
+        BASE + "/mime/text/css": 1,
+    }
 
 
 def test_crawl_df_seed_entry(spark, tmp_path):
     """crawl_df: seeds arrive as a DataFrame (the sitemap-scale
     entry) — blank/duplicate seeds drop via the relational dedupe,
-    table mode is forced, and the final state matches crawl(list)."""
+    the seed counter comes from the deduped append, and the final
+    state matches crawl(list)."""
     rows = crawler_server_rows(BASE)
     cfg = CrawlConfig()
     fetcher = TableFetcher(site_graph_df(spark, rows), cfg)
@@ -792,28 +787,24 @@ def test_crawl_df_seed_entry(spark, tmp_path):
     seeds = spark.createDataFrame(
         [(BASE,), (BASE,), ("   ",), (BASE + "/",)], "url_raw string")
     c.crawl_df(seeds)
-    assert c._seed_table_mode and c._seed_norms == set()
     assert c._n_seeds == 1 and c._n_done_seeds == 1
     ref = crawl(spark, tmp_path / "lst", rows, BASE)
     assert c.result_urls() == ref.result_urls()
 
 
 def test_table_seed_mode_resume(spark, tmp_path):
-    """Resume in table mode: the done-seed sidecar rebuilds from
-    results ∩ r0-frontier with counters only — final state identical
-    to an uninterrupted table-mode run."""
+    """Resume: the done-seed sidecar rebuilds from results ∩
+    r0-frontier with counters only — final state identical to an
+    uninterrupted run."""
     rows = crawler_server_rows(BASE)
-    cfg = CrawlConfig(max_per_host_per_round=2, max_rounds=2,
-                      seed_state_mode="table")
+    cfg = CrawlConfig(max_per_host_per_round=2, max_rounds=2)
     crawler = crawl(spark, tmp_path / "killed", rows, BASE, cfg)
 
-    cfg2 = CrawlConfig(max_per_host_per_round=2, max_rounds=50,
-                       seed_state_mode="table")
+    cfg2 = CrawlConfig(max_per_host_per_round=2, max_rounds=50)
     fetcher = TableFetcher(site_graph_df(spark, rows), cfg2)
     resumed = FrontierCrawler.resume(
         spark, fetcher, str(tmp_path / "killed" / "crawl"), cfg2)
     resumed.continue_crawl()
-    assert resumed._seed_norms == set() and resumed._done_seeds == set()
     assert resumed._n_seeds == 1 and resumed._n_done_seeds == 1
 
     full = crawl(spark, tmp_path / "full", rows, BASE,
@@ -821,10 +812,37 @@ def test_table_seed_mode_resume(spark, tmp_path):
     assert resumed.result_urls() == full.result_urls()
 
 
+def test_done_seed_sidecar_dedupes_duplicate_fetch_rows(spark, tmp_path):
+    """Regression (ADVICE #3): a fetcher that returns a row twice must
+    not count one seed done twice. Two seeds share a host under a
+    1/host budget, so one is still pending after round 0; a duplicate
+    there would make the counters agree early, stop completion
+    tracking, and leave the deferred seed out of the sidecar."""
+    from simplecrawler_spark.sources.fixtures import _row
+
+    seeds = ["http://s.test/a", "http://s.test/b"]
+    cfg = CrawlConfig(max_per_host_per_round=1, max_rounds=10,
+                      obey_robots=False)
+    inner = TableFetcher(site_graph_df(
+        spark, [_row(u, body="") for u in seeds]), cfg)
+
+    def fetch_twice(df):
+        # page fetches only (frontier rows carry depth); robots.txt
+        # fetches pass through unchanged
+        out = inner(df)
+        return out.unionByName(out) if "depth" in df.columns else out
+
+    c = FrontierCrawler(spark, fetch_twice, cfg,
+                        root=str(tmp_path / "dup" / "crawl"))
+    c.crawl(seeds)
+    assert sorted(r.url_norm for r in c._read_done_seeds().collect()) \
+        == seeds
+    assert c._n_seeds == 2 and c._n_done_seeds == 2
+
+
 def test_million_seed_crawl_no_driver_seed_state(spark, tmp_path):
-    """Forced 10^6-seed crawl through crawl_df: no O(|seeds|) Python
-    set ever exists on the driver (both sets stay empty, only the two
-    counters move) and every seed lands in results exactly once."""
+    """Forced 10^6-seed crawl through crawl_df: only the two counters
+    move on the driver and every seed lands in results exactly once."""
     n = 1_000_000
     graph = spark.range(n).select(
         F.concat(F.lit("http://big.test/p"), F.col("id")).alias("url"),
@@ -836,7 +854,7 @@ def test_million_seed_crawl_no_driver_seed_state(spark, tmp_path):
         F.lit(None).cast("string").alias("redirect_location"),
         F.lit(None).cast("string").alias("ua_required"),
         F.lit(None).cast("string").alias("image_id"))
-    cfg = CrawlConfig(obey_robots=False, seed_state_mode="auto")
+    cfg = CrawlConfig(obey_robots=False)
     fetcher = TableFetcher(graph, cfg)
     c = FrontierCrawler(spark, fetcher, cfg,
                         root=str(tmp_path / "mega" / "crawl"))
@@ -844,10 +862,45 @@ def test_million_seed_crawl_no_driver_seed_state(spark, tmp_path):
         F.concat(F.lit("http://big.test/p"), F.col("id"))
         .alias("url_raw"))
     c.crawl_df(seeds)
-    assert c._seed_table_mode
-    assert c._seed_norms == set() and c._done_seeds == set()
     assert c._n_seeds == n and c._n_done_seeds == n
     assert c.results().count() == n
+
+
+def test_fractional_rank_scores_order_scheduling(spark, tmp_path):
+    """Regression (ADVICE #2): priority_source='rank' keeps fractional
+    scores — a 0.9-score page fetches before a 0.1-score page under a
+    1/host budget. The url_hash tie-break alone would take the
+    0.1-score page first (xxhash64 of /a < /b), so truncating the
+    scores to 0 reverses the order."""
+    from simplecrawler_spark.sources.fixtures import (
+        _row, make_html_from_links,
+    )
+
+    seed = "http://s.test/"
+    low, high = "http://tgt.test/a", "http://tgt.test/b"
+    rows = [_row(seed, body=make_html_from_links([low, high])),
+            _row(low, body=""), _row(high, body="")]
+    rank_path = str(tmp_path / "scores.parquet")
+    spark.createDataFrame([(low, 0.1), (high, 0.9)],
+                          "v string, score double").write.parquet(rank_path)
+    cfg = CrawlConfig(max_per_host_per_round=1, max_rounds=10,
+                      same_authority_only=False, priority_source="rank",
+                      rank_table_path=rank_path, rank_column="score")
+    c = FrontierCrawler(spark, TableFetcher(site_graph_df(spark, rows), cfg),
+                        cfg, root=str(tmp_path / "frac"))
+    c.crawl(seed)
+    rounds = {r.url_norm: r.round
+              for r in c.results().select("url_norm", "round").collect()}
+    assert rounds[high] < rounds[low]
+
+
+@pytest.mark.parametrize("source", ["pagerank", "indgree"])
+def test_unknown_priority_source_rejected(spark, tmp_path, source):
+    """An unknown priority_source is loud, not silently fifo — the
+    removed 'pagerank' alias included ('rank' covers it)."""
+    with pytest.raises(ValueError, match="unknown priority_source"):
+        FrontierCrawler(spark, None, CrawlConfig(priority_source=source),
+                        root=str(tmp_path / "bad"))
 
 
 def test_hits_authority_priority_schedules_ranked_pages_first(
